@@ -29,16 +29,24 @@ object Engine {
     * polygon side is reused by the toponym phase — the reference's
     * build-then-probe barrier falls out of the join's build/probe
     * contract (SURVEY §2.4 J4).
+    *
+    * Eager work happens here, before the frame is returned: the sheets
+    * and layer-boroughs files are collected once into driver-side maps
+    * shared by both phases, and each phase's deduped rows are
+    * materialized by its H4 check, which throws
+    * `IllegalStateException` on a missing sheet. Writing the frame then
+    * runs as one job plus the spatial join's exchanges; nothing stays
+    * cached afterwards.
     */
   def transform(spark: SparkSession, dirs: Dirs): DataFrame = {
     graft.functions.exprs.register(spark)
-    val sheets = GeoJson.sheets(spark, dirs.sheets)
-    val layers = GeoJson.layerBoroughs(spark, dirs.layerBoroughs)
+    val dims = InspectorPipeline.Dims.collect(
+      GeoJson.sheets(spark, dirs.sheets),
+      GeoJson.layerBoroughs(spark, dirs.layerBoroughs))
     val cons = InspectorPipeline.consolidated(
-      spark, GeoJson.consolidated(spark, dirs.consolidated), sheets, layers)
+      spark, GeoJson.consolidated(spark, dirs.consolidated), dims)
     val topo = InspectorPipeline.toponyms(
-      spark, GeoJson.toponyms(spark, dirs.toponyms), sheets, layers,
-      cons.indexedBuildings)
+      spark, GeoJson.toponyms(spark, dirs.toponyms), dims, cons.indexedBuildings)
     cons.records.unionByName(topo)
   }
 

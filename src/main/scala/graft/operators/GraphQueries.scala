@@ -1378,7 +1378,8 @@ object GraphQueries {
       // newly-reached node count per (round, landmark bit)
       val counts = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
       var round = 1
-      var frontierNonEmpty = true
+      // no landmark (no nation-0 supplier) → nothing to expand
+      var frontierNonEmpty = nSeeds > 0
       while (round <= BfsRounds && frontierNonEmpty) {
         val nbr = sym
           .join(state.filter($"fmask" =!= 0L).select($"node", $"fmask"),
@@ -1397,7 +1398,8 @@ object GraphQueries {
           sum(when($"fmask" =!= 0L, 1L).otherwise(0L)).as("n"),
           (0 until nSeeds).map(i =>
             sum(expr(s"(fmask >> $i) & 1")).as(s"c$i")): _*).head()
-        frontierNonEmpty = cntRow.getLong(0) > 0
+        // sum over an empty state frame is NULL
+        frontierNonEmpty = !cntRow.isNullAt(0) && cntRow.getLong(0) > 0
         if (frontierNonEmpty) {
           counts += Array.tabulate(nSeeds)(i => cntRow.getLong(i + 1))
           state = next

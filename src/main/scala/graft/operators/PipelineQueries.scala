@@ -137,25 +137,17 @@ object PipelineQueries {
   /** The full composed record stream (consolidated + toponym phases)
     * over the synthesized inputs — shared by the flattened
     * `pipe_end_to_end` gate and the serialized `pipe_ndjson_lines`
-    * gate. The synth inputs are localCheckpoint-ed: each is re-read
-    * under several output branches (sheets feeds both phases' dims,
-    * consolidated feeds 5 record branches + the spatial index), and
-    * materializing them once collapses the re-derived join subtrees
-    * the round-2 plan audit flagged (59 exchanges).
+    * gate. As in `Engine.transform`, the sheet and borough tables are
+    * collected once into the driver-side maps both phases read.
     */
   private def pipelineRecords(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val layers = Tables.region(s, d).filter($"r_regionkey" =!= 4)
       .select($"r_regionkey".cast("long").as("id"), $"r_name".as("borough"))
-    // the three synth-input materializations are independent —
-    // overlap their checkpoint jobs (guide §2.6, the Par device)
-    val Seq(sheets, synthCons, synthTopo) = graft.util.Par(
-      () => synthSheets(s, d).localCheckpoint(),
-      () => synthConsolidated(s, d).localCheckpoint(),
-      () => synthToponyms(s, d).localCheckpoint())
-    val cons = InspectorPipeline.consolidated(s, synthCons, sheets, layers)
+    val dims = InspectorPipeline.Dims.collect(synthSheets(s, d), layers)
+    val cons = InspectorPipeline.consolidated(s, synthConsolidated(s, d), dims)
     val topo = InspectorPipeline.toponyms(
-      s, synthTopo, sheets, layers, cons.indexedBuildings)
+      s, synthToponyms(s, d), dims, cons.indexedBuildings)
     cons.records.unionByName(topo)
   }
 

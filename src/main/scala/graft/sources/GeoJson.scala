@@ -11,18 +11,24 @@ import org.apache.spark.sql.types._
   * `consensus_address` ('NONE' | array, building-inspector.js:142) and
   * heterogeneous geometry coordinates (Point = array<double>, Polygon
   * = array^3<double>). Both are declared StringType, which makes
-  * Spark's JSON parser capture the raw JSON subtree verbatim; callers
-  * re-parse with `from_json` once the geometry type is known. This
-  * keeps every row parseable in one pass with zero UDFs.
+  * Spark's JSON parser capture the raw JSON subtree as compact text
+  * (float literals in shortest round-trip form, as the reference's
+  * JSON.parse + JSON.stringify prints them); callers re-parse with
+  * `from_json` once the geometry type is known. This keeps every row
+  * parseable in one pass with zero UDFs.
   *
   * Each reader emits `ingest_order` (the feature's index in the
   * collection) because the reference's first-seen dedup semantics
   * (building-inspector.js:92-100) are defined by file order.
   *
-  * Scale note: `multiLine=true` on one FeatureCollection document
-  * parses on a single task — fine for landing files; at 100 TB the
-  * download step writes NDJSON (one feature per line) and
-  * [[featuresNdjson]] reads it fully parallel with the same schema.
+  * Scale note: a FeatureCollection document is read through the
+  * `geojson` DataSource V2 source ([[graft.sources.v2.GeoJsonDataSource]]),
+  * which splits one file into byte ranges of whole features, and each
+  * feature is parsed by `from_json` with the fixed schema — so one
+  * landing file parses on every core, with `ingest_order` still its
+  * exact index in the file. At 100 TB the download step writes NDJSON
+  * (one feature per line) and [[featuresNdjson]] reads it with the same
+  * schema.
   */
 object GeoJson {
 
@@ -71,18 +77,22 @@ object GeoJson {
     ))),
   ))
 
-  private def collectionSchema(feature: StructType) = StructType(Seq(
-    StructField("type", StringType),
-    StructField("features", ArrayType(feature)),
-  ))
+  /** Smallest byte-range split: small files (sheets, boroughs) stay
+    * one task.
+    */
+  private val MinChunkBytes = 64L * 1024
 
-  /** One FeatureCollection document → (ingest_order, feature) rows. */
-  def features(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read
-      .schema(collectionSchema(schema))
-      .option("multiLine", value = true)
-      .json(path)
-      .select(posexplode(col("features")).as(Seq("ingest_order", "feature")))
+  /** One FeatureCollection document → (ingest_order, feature) rows, in
+    * about `defaultParallelism` byte-range tasks.
+    */
+  def features(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+    val size = new java.io.File(path).length()
+    val chunkBytes = math.max(MinChunkBytes, size / spark.sparkContext.defaultParallelism + 1)
+    spark.read.format("geojson")
+      .option("chunkBytes", chunkBytes)
+      .load(path)
+      .select(col("ingest_order"), from_json(col("feature_json"), schema).as("feature"))
+  }
 
   /** NDJSON variant: one feature per line, order by file position. */
   def featuresNdjson(spark: SparkSession, path: String, schema: StructType): DataFrame =

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   *
   * Null fields are omitted (to_json default), mirroring JS `undefined`
   * fields vanishing under JSON.stringify. Geometry travels as the raw
-  * JSON subtree captured at ingest, spliced in verbatim so coordinates
-  * round-trip byte-identically.
+  * JSON subtree captured at ingest ([[GeoJson]]), spliced in as is, so
+  * coordinates are never re-parsed or re-rounded here.
   *
   * The reference's strictly-sequential write order is not semantic
   * (SURVEY §2.7); the sink stays parallel. Tests canonicalize by

@@ -74,11 +74,15 @@ class PlanBudgetSpec extends AnyFunSuite {
       "sim_lsh_ann_topk" -> 8,
       "td_minhash_lsh_pairs" -> 8,
       "td_minhash_jaccard_verify" -> 16,
-      "pipe_end_to_end" -> 30,
+      // the inspector pipeline plans 4: the gate's sort, the
+      // indexed-layer set and its broadcast, and the indexed buildings'
+      // broadcast (dims are driver literals; the dedup shuffles run
+      // before the checkpoints the plan reads)
+      "pipe_end_to_end" -> 4,
       // round-4 additions: every remaining catalogue query above ~1 s
       // at sf0.1 (streaming parities pin via their batch duals — their
       // own executed plan is just the memory-sink read)
-      "pipe_ndjson_lines" -> 30,
+      "pipe_ndjson_lines" -> 4,
       "sim_ivf_cell_assign" -> 8,
       "sim_ivf_probe_topk" -> 12,
       "td_dedup_clusters" -> 6,

@@ -1,11 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The DSv2 streaming GeoJSON source must yield the same features, in
-  * the same ingest order, as the multiLine whole-document reader.
+  * the same ingest order, as Spark's built-in multiLine JSON reader of
+  * the whole document.
   */
 class GeoJsonV2Spec extends AnyFunSuite {
 
@@ -15,26 +17,76 @@ class GeoJsonV2Spec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** Spark's own whole-document read: one multiLine task, features
+    * exploded by position.
+    */
+  private def builtIn(path: String, feature: StructType) =
+    spark.read
+      .schema(StructType(Seq(
+        StructField("type", StringType),
+        StructField("features", ArrayType(feature)))))
+      .option("multiLine", value = true)
+      .json(path)
+      .select(posexplode(col("features")).as(Seq("ingest_order", "feature")))
+
+  /** (ingest_order, feature as JSON) in ingest order. */
+  private def rows(df: DataFrame): Array[(Long, String)] =
+    df.orderBy("ingest_order")
+      .select(col("ingest_order").cast("long"), to_json(col("feature")))
+      .collect().map(r => (r.getLong(0), r.getString(1)))
+
   test("v2 source matches the multiLine reader on the fixture, in order") {
     val path = getClass.getResource("/inspector/consolidated.geojson").getPath
     val v2 = spark.read.format("geojson").load(path)
       .select(col("ingest_order"),
         from_json(col("feature_json"), GeoJson.consolidatedFeatureSchema).as("feature"))
-    val classic = GeoJson.consolidated(spark, path)
-
-    val v2Rows = v2.orderBy("ingest_order")
-      .selectExpr("ingest_order", "feature.properties.id", "feature.properties.sheet_id")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    val classicRows = classic.orderBy("ingest_order")
-      .selectExpr("CAST(ingest_order AS LONG)", "feature.properties.id", "feature.properties.sheet_id")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    assert(v2Rows.nonEmpty && v2Rows.sameElements(classicRows))
+    val expected = rows(builtIn(path, GeoJson.consolidatedFeatureSchema))
+    assert(expected.nonEmpty && rows(v2).sameElements(expected))
+    assert(rows(GeoJson.consolidated(spark, path)).sameElements(expected))
 
     // one partition per file below the chunk threshold
     assert(v2.rdd.getNumPartitions == 1)
     val both = spark.read.format("geojson").load(s"$path,$path")
     assert(both.rdd.getNumPartitions == 2)
-    assert(both.count() == 2 * v2Rows.length)
+    assert(both.count() == 2 * expected.length)
+  }
+
+  test("a landing file of thousands of features reads on every core, in exact order") {
+    val n = 5000
+    val features = (0 until n).map { i =>
+      s"""{"type":"Feature","properties":{"sheet_id":${i % 37},"consensus":"t$i"},""" +
+        s""""geometry":{"type":"Point","coordinates":[-73.${1000 + i}1,40.${i % 97}5]}}"""
+    }
+    val f = java.io.File.createTempFile("graft-landing", ".geojson")
+    try {
+      java.nio.file.Files.writeString(f.toPath,
+        s"""{"type":"FeatureCollection","features":[${features.mkString(",")}]}""")
+      val read = GeoJson.toponyms(spark, f.getPath)
+      assert(read.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+      val got = rows(read)
+      assert(got.map(_._1).sameElements(0L until n.toLong))
+      assert(got.sameElements(rows(builtIn(f.getPath, GeoJson.toponymFeatureSchema))))
+    } finally f.delete()
+  }
+
+  // from_json captures a raw subtree by re-printing its tokens, so a
+  // float literal comes out in its shortest round-trip form — as the
+  // reference's JSON.parse + JSON.stringify prints it — where Spark's
+  // whole-file reader would keep the landing file's bytes.
+  test("raw coordinates print float literals in shortest round-trip form") {
+    val f = java.io.File.createTempFile("graft-literals", ".geojson")
+    try {
+      java.nio.file.Files.writeString(f.toPath,
+        """{"type":"FeatureCollection","features":[{"type":"Feature",""" +
+          """"properties":{"sheet_id":1,"consensus":"a"},""" +
+          """"geometry":{"type":"Point","coordinates":[-73.1000,40,1.5e2]}}]}""")
+      val coords = GeoJson.toponyms(spark, f.getPath)
+        .select(col("feature.geometry.coordinates")).head().getString(0)
+      assert(coords == "[-73.1,40,150.0]")
+      val verbatim = builtIn(f.getPath, GeoJson.toponymFeatureSchema)
+        .select(col("feature.geometry.coordinates")).head().getString(0)
+      assert(verbatim == "[-73.1000,40,1.5e2]")
+    } finally f.delete()
   }
 
   test("a file above chunkBytes splits into byte-range tasks with exact rows") {
